@@ -92,6 +92,13 @@ def _status_over(value: Column, warn, crit) -> Column:
     return s
 
 
+def _sql_string(text: str) -> str:
+    """``text`` as a Spark SQL string literal: backslashes and quotes
+    escaped, so a caller-supplied name (a ``feature_slas`` key) stays
+    one literal instead of breaking or extending the generated SQL."""
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def pipeline_health(
     trades: DataFrame,
     *,
@@ -281,8 +288,8 @@ def pipeline_health(
     ) -> str:
         thr = lit_d(threshold) if threshold is not None else "NULL"
         return (
-            f"named_struct('component', '{component}', 'metric', "
-            f"'{metric}', 'value', round({value}, 6), 'threshold', "
+            f"named_struct('component', {_sql_string(component)}, 'metric', "
+            f"{_sql_string(metric)}, 'value', round({value}, 6), 'threshold', "
             f"CAST({thr} AS DOUBLE), 'status', {status})"
         )
 

@@ -6,18 +6,21 @@ contract doc (/root/reference/sql/smartdb_contract.md:16-119): every
 feature is a pure ``DataFrame → DataFrame`` builder plus metadata —
 freshness SLA, output schema, test method — queryable at runtime.
 
-The registry is the glue between batch and continuous refresh: a
-scheduler (or Structured Streaming job) iterates `all_features()` and
-materializes each one; `sla_seconds` drives the freshness monitors
+The registry is the glue between batch and continuous refresh:
+`materialize_all` submits every registered feature as its own
+concurrent Spark job (the reference's independent aggregates run as
+parallel jobs), and `sla_seconds` drives the freshness monitors
 (quality.freshness / G4).
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
+from pyspark.util import inheritable_thread_target
 
 from . import features as FX
 
@@ -125,12 +128,34 @@ def materialize_all(
     """Batch-materialize every registered feature to parquet (the
     Airflow-DAG replacement — reference
     airflow/dags/data_quality_dags.py:159-174). Returns rows per
-    feature."""
-    counts: dict[str, int] = {}
-    for spec in all_features():
-        df = spec.builder(trades)
-        df.write.mode(mode).parquet(f"{base_dir}/{spec.name}")
-        counts[spec.name] = df.sparkSession.read.parquet(
-            f"{base_dir}/{spec.name}"
-        ).count()
-    return counts
+    feature, keyed in registry order.
+
+    Each feature (builder → parquet write → read-back count) runs on its
+    own thread, one per registered feature, so its Spark jobs overlap
+    with the others'. A single feature job is latency-bound (planning,
+    codegen, a one-task first stage), so run one after another they
+    leave most cores idle. Every task is wrapped with
+    ``inheritable_thread_target``: the caller's job group, description
+    and scheduler pool reach every job. If any feature fails, the call
+    still waits for all of them (the others are written), then re-raises
+    the first failure in registry order.
+    """
+    spark = trades.sparkSession
+    specs = all_features()
+
+    def write_and_count(spec: FeatureSpec) -> int:
+        path = f"{base_dir}/{spec.name}"
+        spec.builder(trades).write.mode(mode).parquet(path)
+        return spark.read.parquet(path).count()
+
+    with ThreadPoolExecutor(
+        max_workers=len(specs), thread_name_prefix="materialize"
+    ) as pool:
+        # wrap per task: each thread gets its own copy of the caller's
+        # local properties (a shared copy would cross-wire the
+        # per-thread SQL execution ids)
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(write_and_count), spec)
+            for spec in specs
+        ]
+    return {spec.name: f.result() for spec, f in zip(specs, futures)}

@@ -48,6 +48,20 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def default_driver_memory() -> str:
+    """Driver heap for a factory-launched JVM: half of physical RAM,
+    never above 24g. ``SPARK_GRAFT_DRIVER_MEM`` overrides it."""
+    try:
+        with open("/proc/meminfo") as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    total_mb = int(line.split()[1]) // 1024
+                    return f"{min(24 * 1024, total_mb // 2)}m"
+    except OSError:
+        pass
+    return "24g"
+
+
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     """Apply dynamic SQL confs to an externally-created session.
 
@@ -75,11 +89,13 @@ def get_spark(
         .master(master or f"local[{cores}]")
         # local[N] runs every task inside the driver JVM, whose default
         # heap is 1g — starved at 32 concurrent tasks (GC-locker stalls
-        # kill tasks and their shuffle files on wide joins). Only takes
+        # kill tasks and their shuffle files on wide joins). A heap sized
+        # past physical RAM gets the JVM OOM-killed instead. Only takes
         # effect when this factory launches the JVM; a driver-provided
         # session keeps its own sizing.
         .config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
         )
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cores))
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")

@@ -191,6 +191,22 @@ def test_overall_is_worst_of_components(spark):
     assert rep[("overall", "status")]["status"] == worst
 
 
+def test_quoted_feature_name_stays_a_literal(spark):
+    """A feature_slas key with a quote (or a backslash) is reported
+    verbatim; it can neither break nor extend the generated SQL."""
+    t = _mk(spark, _clean_rows())
+    names = ["o'hlc", "x', 'y", "back\\slash"]
+    rep = _report(
+        pipeline_health(
+            t, now_offset_s=0.5, feature_slas={n: 30 for n in names}
+        )
+    )
+    for n in names:
+        assert rep[("features", f"staleness_seconds:{n}")]["status"] == "healthy"
+    staleness = [m for c, m in rep if m.startswith("staleness_seconds:")]
+    assert sorted(staleness) == sorted(f"staleness_seconds:{n}" for n in names)
+
+
 def test_prometheus_export_format(spark):
     from open_source_financial_time_series_data_pipeline_architecture_spark.functions.health import (
         prometheus_export,

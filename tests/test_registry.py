@@ -3,6 +3,10 @@ SLA metadata, and end-to-end materialization."""
 
 from __future__ import annotations
 
+import threading
+
+import pytest
+
 from open_source_financial_time_series_data_pipeline_architecture_spark.functions import (
     registry as REG,
 )
@@ -29,14 +33,65 @@ def test_registry_matches_contract_slas():
     assert {s.name: s.sla_seconds for s in REG.all_features()} == EXPECTED
 
 
+def _smoke_trades(spark):
+    return trades_from_events(load_table(spark, SF_SMOKE, "events"))
+
+
 def test_materialize_all(spark, tmp_path):
-    trades = trades_from_events(load_table(spark, SF_SMOKE, "events"))
+    trades = _smoke_trades(spark)
     counts = REG.materialize_all(trades, str(tmp_path / "features"))
+    assert list(counts) == [s.name for s in REG.all_features()]
     assert set(counts) == set(EXPECTED)
+    # the concurrent run writes exactly what a serial build -> write ->
+    # count loop over the same trades writes
+    serial = {}
+    for spec in REG.all_features():
+        path = str(tmp_path / "serial" / spec.name)
+        spec.builder(trades).write.parquet(path)
+        serial[spec.name] = spark.read.parquet(path).count()
+    assert counts == serial
     assert all(n > 0 for n in counts.values())
     # spot-check a materialized table round-trips with a readable schema
     ohlc = spark.read.parquet(str(tmp_path / "features" / "ohlc_1m"))
     assert {"bucket", "symbol", "open", "close"} <= set(ohlc.columns)
+
+
+def test_materialize_all_jobs_join_caller_group(spark, tmp_path):
+    """Every feature's jobs carry the caller's job group (a bare thread
+    pool would run them outside it: cancelJobGroup could not stop them)."""
+    sc = spark.sparkContext
+    trades = _smoke_trades(spark)
+    sc.setJobGroup("g", "registry backfill")
+    try:
+        REG.materialize_all(trades, str(tmp_path / "features"))
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    jobs = sc.statusTracker().getJobIdsForGroup("g")
+    # each feature runs at least a parquet write and a read-back count
+    assert len(jobs) >= 2 * len(REG.all_features())
+
+
+def test_materialize_all_failure_waits_and_reraises(spark, tmp_path, monkeypatch):
+    class Boom(RuntimeError):
+        pass
+
+    def explode(trades):
+        raise Boom("builder failed")
+
+    monkeypatch.setitem(
+        REG.REGISTRY, "broken",
+        REG.FeatureSpec("broken", explode, 1, "time", "always raises", "none"),
+    )
+    before = threading.active_count()
+    out = tmp_path / "features"
+    with pytest.raises(Boom):
+        REG.materialize_all(_smoke_trades(spark), str(out))
+    # the healthy features were still written, and no thread outlives the call
+    for name in EXPECTED:
+        assert spark.read.parquet(str(out / name)).count() > 0
+    assert threading.active_count() == before
 
 
 def test_driver_window_all_oracled():
